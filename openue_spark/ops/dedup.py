@@ -446,7 +446,9 @@ def with_simhash(corpus: DataFrame) -> DataFrame:
             np.ones(64, dtype=np.uint64), np.arange(64, dtype=np.uint64)
         )
         for pdf in batches:
-            toks_col = list(pdf["tokens"])
+            # a NULL token array (NULL text) votes like an empty one:
+            # simhash 0, as in with_simhash_expr
+            toks_col = [[] if t is None else t for t in pdf["tokens"]]
             counts = np.fromiter(
                 (len(t) for t in toks_col), dtype=np.int64, count=len(toks_col)
             )
@@ -835,8 +837,9 @@ def embedding_near_dup_pairs(embeddings: DataFrame, min_cosine: float = 0.95) ->
     )
     sc = embeddings.sparkSession.sparkContext
     n_blocks = max(4, int(2 * sc.defaultParallelism ** 0.5))
+    # hash, not pmod(vec_id): block assignment must accept any id type
     tagged = q.withColumn(
-        "gid", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int")
+        "gid", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
     )
     replicated = tagged.select(
         "vec_id",

@@ -5,7 +5,8 @@ any broadcast object with seq_probs_batch/ner_tags_batch methods IS the
 model. These tests prove the seam carries real weight bundles:
 
 - NumpyBagModel (torch-free exported-weights scorer) drives the FULL
-  fused and staged Spark extraction in every environment.
+  Spark extraction in every environment, equal to the numpy oracle run
+  through the same model (oracle.extract_corpus(..., model=...)).
 - HFTransformerWeights (real HuggingFace BERT pair, random tiny weights —
   no download) does the same wherever torch+transformers are importable;
   importorskip-gated otherwise (this sandbox ships neither). This is the
@@ -21,6 +22,13 @@ import pytest
 
 def _key(r):
     return (r.conv_id, r.turn_idx, r.rel_id, r.subj, r.pred, r.obj)
+
+
+def _oracle(turns, **seams):
+    from openue_spark.oracle import extract_corpus
+
+    rows = [(r.conv_id, r.turn_idx, r.text) for r in turns.collect()]
+    return sorted(map(_key, extract_corpus(rows, **seams)))
 
 
 def _vocab_path():
@@ -49,23 +57,21 @@ def test_numpy_bag_model_pickles_and_scores_deterministically():
     assert t_other.shape == t1.shape
 
 
-def test_numpy_bag_model_drives_extraction_fused_equals_staged(spark):
+def test_numpy_bag_model_drives_extraction_matches_oracle(spark):
     from openue_spark.fixtures import transcripts_spark
     from openue_spark.hf_models import NumpyBagModel
     from openue_spark.pipeline.extract import extract_triples
 
     turns = transcripts_spark(spark, 300)
-    model_bc = spark.sparkContext.broadcast(NumpyBagModel.tiny_random(7))
-    fused = sorted(map(_key, extract_triples(turns, weights_bc=model_bc).collect()))
-    staged = sorted(
-        map(_key, extract_triples(turns, weights_bc=model_bc, fused=False).collect())
-    )
-    assert fused == staged
-    assert len(fused) > 0
+    model = NumpyBagModel.tiny_random(7)
+    model_bc = spark.sparkContext.broadcast(model)
+    got = sorted(map(_key, extract_triples(turns, weights_bc=model_bc).collect()))
+    assert got == _oracle(turns, model=model)
+    assert len(got) > 0
     # the custom forward actually decided the output: default mock weights
     # extract a different triple set from the same corpus
     default = sorted(map(_key, extract_triples(turns).collect()))
-    assert fused != default
+    assert got != default
 
 
 def test_hf_transformer_rides_the_weights_and_tokenizer_seams(spark):
@@ -94,13 +100,12 @@ def test_hf_transformer_rides_the_weights_and_tokenizer_seams(spark):
     assert np.array_equal(bundle.ner_tags_batch(padded, np.array([0, 1])), want_tags)
 
     # a REAL transformer + a REAL WordPiece vocab through both broadcast
-    # seams, full fused-vs-staged Spark extraction
+    # seams, full Spark extraction vs the oracle on the same model + vocab
+    tok = VocabWordPieceTokenizer.from_file(_vocab_path())
     weights_bc = spark.sparkContext.broadcast(bundle)
-    tokenizer_bc = spark.sparkContext.broadcast(
-        VocabWordPieceTokenizer.from_file(_vocab_path())
-    )
+    tokenizer_bc = spark.sparkContext.broadcast(tok)
     turns = transcripts_spark(spark, 120)
-    fused = sorted(
+    got = sorted(
         map(
             _key,
             extract_triples(
@@ -108,15 +113,4 @@ def test_hf_transformer_rides_the_weights_and_tokenizer_seams(spark):
             ).collect(),
         )
     )
-    staged = sorted(
-        map(
-            _key,
-            extract_triples(
-                turns,
-                weights_bc=weights_bc,
-                tokenizer_bc=tokenizer_bc,
-                fused=False,
-            ).collect(),
-        )
-    )
-    assert fused == staged
+    assert got == _oracle(turns, encode_fn=tok.encode, model=bundle)

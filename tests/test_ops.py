@@ -186,8 +186,8 @@ def test_simhash_kernel_bit_equals_expression_form(spark):
     """Round-6 invariant: the Arrow-batched numpy fingerprint pass
     (with_simhash) is BIT-IDENTICAL to the pure-SQL reference form the
     DuckDB oracle mirrors (with_simhash_expr) — including unicode tokens,
-    empty-string tokens, and a doc with an empty token array (the numpy
-    reduceat fallback branch)."""
+    empty-string tokens, and docs with an empty or NULL token array (the
+    numpy reduceat fallback branch)."""
     from openue_spark.ops.dedup import with_simhash, with_simhash_expr
 
     rng = np.random.RandomState(7)
@@ -195,7 +195,7 @@ def test_simhash_kernel_bit_equals_expression_form(spark):
     rows = [
         (i, list(rng.choice(vocab, size=rng.randint(1, 30))))
         for i in range(60)
-    ] + [(1000, [""]), (1001, [])]
+    ] + [(1000, [""]), (1001, []), (1002, None)]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
     got = {r.doc_id: r.simhash for r in with_simhash(df).collect()}
     want = {
@@ -292,6 +292,21 @@ def test_embedding_near_dup_symmetric_threshold(spark, emb):
     pairs = embedding_near_dup_pairs(emb, min_cosine=0.5).collect()
     for r in pairs:
         assert r.a_id < r.b_id and r.cosine_r >= 0.5
+
+
+def test_embedding_near_dup_string_ids_match_long_ids(spark, emb):
+    """Blocks are assigned by hashing vec_id, so string ids work and pair
+    the same vectors as long ids ('v000'..'v079' sort like 0..79)."""
+    from openue_spark.ops.dedup import embedding_near_dup_pairs
+
+    rows = [(f"v{r.vec_id:03d}", r.embedding) for r in emb.collect()]
+    str_emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    want = {
+        (f"v{r.a_id:03d}", f"v{r.b_id:03d}", r.cosine_r)
+        for r in embedding_near_dup_pairs(emb, min_cosine=0.5).collect()
+    }
+    got = {tuple(r) for r in embedding_near_dup_pairs(str_emb, min_cosine=0.5).collect()}
+    assert got == want and want
 
 
 def test_embedding_bucketed_recall_vs_brute_force(spark):

@@ -18,19 +18,16 @@ def _plan(df) -> str:
 
 
 def test_extraction_plan_is_zero_shuffle(spark):
-    """PLANS.md section 1: NO Exchange anywhere in either extraction plan —
+    """PLANS.md section 1: NO Exchange anywhere in the extraction plan —
     parallelism rides input partitions, so the same plan fans out across
-    1000 executors with no coordination. The fused production path is ONE
-    Python stage (one runner per task); the staged decomposition is two."""
+    1000 executors with no coordination — and exactly ONE Python stage
+    (one runner per task)."""
     from openue_spark.pipeline import extract_triples
 
     df = spark.createDataFrame(transcripts_pandas(64))
-    fused = _plan(extract_triples(df))
-    assert "Exchange" not in fused, fused
-    assert fused.count("MapInPandas") == 1  # one fused model stage
-    staged = _plan(extract_triples(df, fused=False))
-    assert "Exchange" not in staged, staged
-    assert staged.count("MapInPandas") == 2  # the two model stages
+    plan = _plan(extract_triples(df))
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas") == 1
 
 
 def test_serving_plan_is_zero_shuffle(spark):
